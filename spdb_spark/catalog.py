@@ -242,11 +242,13 @@ def reserve_ids(spark: SparkSession, counter_path: str, lookup_key: str, num_ids
     The read-modify-write holds an exclusive fcntl lock on a sidecar lock
     file for its whole duration, so concurrent drivers get disjoint blocks
     — the parity for the reference's DynamoDB conditional-update counter.
-    (A lock file, not the counter itself, because os.replace swaps the
-    counter inode out from under any lock held on it.)"""
+    (A lock file, not the counter itself, because the atomic rename swaps
+    the counter inode out from under any lock held on it.)"""
     import fcntl
     import json
     import os
+
+    from spdb_spark.commit import write_atomic
 
     os.makedirs(os.path.dirname(counter_path) or ".", exist_ok=True)
     with open(counter_path + ".lock", "w") as lockf:
@@ -258,12 +260,7 @@ def reserve_ids(spark: SparkSession, counter_path: str, lookup_key: str, num_ids
                     counters = json.load(f)
             start = counters.get(lookup_key, 1)
             counters[lookup_key] = start + num_ids
-            tmp = counter_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(counters, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, counter_path)
+            write_atomic(counter_path, json.dumps(counters))
         finally:
             fcntl.flock(lockf, fcntl.LOCK_UN)
     return start, start + num_ids
@@ -288,12 +285,11 @@ def save_resource(root: str, r: Resource) -> str:
     """Persist a resource to the registry (atomic replace). Returns path."""
     import os
 
+    from spdb_spark.commit import write_atomic
+
     path = _catalog_entry_path(root, r.lookup_key or r.boss_key)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(resource_to_json(r))
-    os.replace(tmp, path)
+    write_atomic(path, resource_to_json(r))
     return path
 
 

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spdb_spark.commit import copy_atomic, run_staged_batch, write_atomic
 from spdb_spark.functions.hashing import md5_long
 from spdb_spark.functions.similarity import _as_double, cosine_prenormed, norm
 
@@ -495,7 +496,6 @@ def compact_index(spark, path: str) -> None:
     documented swap-point."""
     import json
     import os
-    import tempfile
 
     cur = _lists_dir(path)
     base = os.path.basename(cur)
@@ -508,10 +508,7 @@ def compact_index(spark, path: str) -> None:
         .partitionBy("centroid_id")
         .parquet(os.path.join(path, dest))
     )
-    fd, tmp = tempfile.mkstemp(dir=path, suffix=".lists.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"lists": dest}, f)
-    os.rename(tmp, os.path.join(path, "_lists.json"))
+    write_atomic(os.path.join(path, "_lists.json"), json.dumps({"lists": dest}))
 
 
 def vacuum_index(path: str) -> None:
@@ -527,71 +524,36 @@ def vacuum_index(path: str) -> None:
 
 
 def staged_partitioned_append(
-    spark,
-    root: str,
-    live_dir: str,
-    batch_id: str,
-    write_stage,
-    partition_col: str = "centroid_id",
+    root: str, live_dir: str, batch_id: str, write_stage
 ) -> None:
-    """Exactly-once append of a partitioned parquet batch into a live
-    partitioned dir — the retrieval.append_to_bm25_index staged protocol
-    shared by the IVF and IVF-PQ indexes (and any partition-dir layout):
-
-    1. skip if `_appendlog/{batch_id}` exists (committed earlier);
-    2. else (re)stage: `write_stage(stage_data_dir)` writes the batch
-       partitioned by `partition_col`, sealed by a `_STAGED` marker —
-       the live dir is untouched, so partial staging is throwaway;
-    3. publish: each staged partition file copies into the live
-       partition dir under a batch-derived SKIP-IF-PRESENT name (via a
-       "_"-temp + rename, so a crash mid-copy never exposes a truncated
-       parquet), then the commit marker renames into place.
-
-    A retry with the SAME batch_id after a crash at ANY point is
-    idempotent: committed -> no-op; staged-but-unpublished -> republish
-    from the sealed staging (same file names); mid-staging -> restage."""
-    import json
+    """Exactly-once append of a batch partitioned by `centroid_id` into the
+    live partitioned dir, shared by the IVF and IVF-PQ indexes: a
+    `commit.run_staged_batch` whose stage is `write_stage(stage/data)` and
+    whose publish copies each staged partition file into the live
+    partition dir under a batch-derived skip-if-present name, so a
+    republish after a crash never duplicates a file."""
     import os
-    import shutil
-    import tempfile
 
-    log_dir = os.path.join(root, "_appendlog")
-    os.makedirs(log_dir, exist_ok=True)
-    marker = os.path.join(log_dir, f"{batch_id}.json")
-    if os.path.exists(marker):
-        return  # committed earlier — idempotent retry
-    stage = os.path.join(root, "_staging", batch_id)
-    staged_flag = os.path.join(stage, "_STAGED")
-    src_root = os.path.join(stage, "data")
-
-    if not os.path.exists(staged_flag):
-        shutil.rmtree(stage, ignore_errors=True)
-        write_stage(src_root)
-        fd, tmp = tempfile.mkstemp(dir=stage, suffix=".tmp")
-        os.close(fd)
-        os.rename(tmp, staged_flag)  # seal: staging complete + reusable
-
-    for part in sorted(os.listdir(src_root)):
-        if not part.startswith(f"{partition_col}="):
-            continue
-        dest_part = os.path.join(live_dir, part)
-        os.makedirs(dest_part, exist_ok=True)
-        for fname in sorted(os.listdir(os.path.join(src_root, part))):
-            if not fname.endswith(".parquet"):
+    def publish(stage: str) -> None:
+        src_root = os.path.join(stage, "data")
+        for part in sorted(os.listdir(src_root)):
+            if not part.startswith("centroid_id="):
                 continue
-            dest = os.path.join(dest_part, f"a{batch_id}-{fname}")
-            if not os.path.exists(dest):
-                fd, tmp = tempfile.mkstemp(
-                    dir=dest_part, prefix="_appendcopy-", suffix=".tmp"
-                )
-                os.close(fd)
-                shutil.copyfile(os.path.join(src_root, part, fname), tmp)
-                os.rename(tmp, dest)
-    fd, tmp = tempfile.mkstemp(dir=log_dir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-    os.rename(tmp, marker)
-    shutil.rmtree(stage, ignore_errors=True)
+            dest_part = os.path.join(live_dir, part)
+            os.makedirs(dest_part, exist_ok=True)
+            for fname in sorted(os.listdir(os.path.join(src_root, part))):
+                if fname.endswith(".parquet"):
+                    copy_atomic(
+                        os.path.join(src_root, part, fname),
+                        os.path.join(dest_part, f"a{batch_id}-{fname}"),
+                    )
+
+    run_staged_batch(
+        root,
+        batch_id,
+        lambda stage: write_stage(os.path.join(stage, "data")),
+        publish,
+    )
 
 
 def append_to_index(
@@ -668,7 +630,6 @@ def append_to_index(
         out.write.mode("append").partitionBy("centroid_id").parquet(lists_dir)
         return
     staged_partitioned_append(
-        spark,
         path,
         lists_dir,
         str(batch_id),

@@ -701,7 +701,8 @@ def compact_ivfpq_index(spark, path: str) -> None:
     contract: don't run concurrently with appends."""
     import json
     import os
-    import tempfile
+
+    from spdb_spark.commit import write_atomic
 
     cur = _codes_dir(path)
     base = os.path.basename(cur)
@@ -714,10 +715,7 @@ def compact_ivfpq_index(spark, path: str) -> None:
         .partitionBy("centroid_id")
         .parquet(os.path.join(path, dest))
     )
-    fd, tmp = tempfile.mkstemp(dir=path, suffix=".codes.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"codes": dest}, f)
-    os.rename(tmp, os.path.join(path, "_codes.json"))
+    write_atomic(os.path.join(path, "_codes.json"), json.dumps({"codes": dest}))
 
 
 def vacuum_ivfpq_index(path: str) -> None:
@@ -789,9 +787,7 @@ def append_to_ivfpq_index(
             .parquet(dest)
         )
 
-    staged_partitioned_append(
-        spark, path, _codes_dir(path), str(batch_id), write_stage
-    )
+    staged_partitioned_append(path, _codes_dir(path), str(batch_id), write_stage)
 
 
 def ivfpq_topk_indexed(

@@ -21,6 +21,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spdb_spark.commit import copy_atomic, run_staged_batch, write_atomic
 from spdb_spark.functions.text import tokens
 
 
@@ -341,10 +342,10 @@ def append_to_bm25_index(
     rebuild (test-pinned; scores depend only on tf/df/stats totals, not
     file layout).
 
-    Crash safety (BatchLedgerSink's staged atomic-rename pattern): the
-    batch is first fully STAGED under `_staging/{batch_id}` (tf rows +
-    the merged df/stats computed against the pre-append base), sealed by
-    a `_STAGED` marker; only then does publish move the tf files in
+    Crash safety (`commit.run_staged_batch`): the batch is first fully
+    STAGED under `_staging/{batch_id}` (tf rows + the merged df/stats
+    computed against the pre-append base), sealed by a `_STAGED`
+    marker; only then does publish move the tf files in
     (skip-if-present names), write versioned df/stats dirs, swing the
     atomic `_current.json` pointer, and record `_appendlog/{batch_id}`.
     A retry WITH THE SAME batch_id after a crash at ANY point is
@@ -364,25 +365,16 @@ def append_to_bm25_index(
     import json
     import os
     import shutil
-    import tempfile
     import uuid
 
     spark = new_docs.sparkSession
     if batch_id is None:
         batch_id = uuid.uuid4().hex
     batch_id = str(batch_id)
-    log_dir = os.path.join(path, "_appendlog")
-    os.makedirs(log_dir, exist_ok=True)
-    marker = os.path.join(log_dir, f"{batch_id}.json")
-    if os.path.exists(marker):
-        return  # committed earlier — idempotent retry
-    stage = os.path.join(path, "_staging", batch_id)
-    staged_flag = os.path.join(stage, "_STAGED")
 
-    if not os.path.exists(staged_flag):
-        # (re)stage from scratch — the base index is untouched until
-        # publish, so partial staging can always be thrown away
-        shutil.rmtree(stage, ignore_errors=True)
+    def stage(stage_dir: str) -> None:
+        # tf rows plus df/stats merged against the pre-append base, which
+        # stays untouched until publish
         df_dir, stats_dir = _resolve_bm25_dirs(path)
         tf = term_freqs(new_docs, id_col, text_col)
         dl = tf.groupBy("doc").agg(F.sum("tf").alias("dl"))
@@ -391,9 +383,9 @@ def append_to_bm25_index(
             .repartition("token")
             .sortWithinPartitions("token")
             .write.mode("overwrite")
-            .parquet(os.path.join(stage, "tf"))
+            .parquet(os.path.join(stage_dir, "tf"))
         )
-        staged_tf = spark.read.parquet(os.path.join(stage, "tf"))
+        staged_tf = spark.read.parquet(os.path.join(stage_dir, "tf"))
         new_df = staged_tf.groupBy("token").agg(F.count("*").alias("df"))
         (
             spark.read.parquet(df_dir)
@@ -401,7 +393,7 @@ def append_to_bm25_index(
             .groupBy("token")
             .agg(F.sum("df").alias("df"))
             .write.mode("overwrite")
-            .parquet(os.path.join(stage, "df"))
+            .parquet(os.path.join(stage_dir, "df"))
         )
         new_stats = staged_tf.groupBy("doc").agg(
             F.first("dl").alias("dl")
@@ -418,43 +410,26 @@ def append_to_bm25_index(
                 )
             ],
             "n_docs bigint, sum_dl bigint",
-        ).write.mode("overwrite").parquet(os.path.join(stage, "stats"))
-        fd, tmp = tempfile.mkstemp(dir=stage, suffix=".tmp")
-        os.close(fd)
-        os.rename(tmp, staged_flag)  # seal: staging is complete + reusable
+        ).write.mode("overwrite").parquet(os.path.join(stage_dir, "stats"))
 
-    # publish — every step idempotent under retry of the same batch_id
-    tf_dest = os.path.join(path, "tf")
-    for fname in sorted(os.listdir(os.path.join(stage, "tf"))):
-        if not fname.endswith(".parquet"):
-            continue
-        dest = os.path.join(tf_dest, f"a{batch_id}-{fname}")
-        if not os.path.exists(dest):
-            # copy to a temp name in the DESTINATION dir then rename: a
-            # crash mid-copy must never leave a truncated parquet visible
-            # under the final name (the skip-if-present retry guard would
-            # otherwise freeze the corruption in forever)
-            # "_" prefix: a crash-orphaned temp is invisible to Spark's
-            # parquet reader (default PathFilter skips _*/.* files)
-            fd, tmp = tempfile.mkstemp(
-                dir=tf_dest, prefix="_tfcopy-", suffix=".tmp"
-            )
-            os.close(fd)
-            shutil.copyfile(os.path.join(stage, "tf", fname), tmp)
-            os.rename(tmp, dest)
-    for sub in ("df", "stats"):
-        vdir = os.path.join(path, f"{sub}_v{batch_id}")
-        if not os.path.exists(vdir):
-            tmpd = vdir + ".tmp"
-            shutil.rmtree(tmpd, ignore_errors=True)
-            shutil.copytree(os.path.join(stage, sub), tmpd)
-            os.rename(tmpd, vdir)  # dir rename: vdir appears complete or not at all
-    fd, tmp = tempfile.mkstemp(dir=path, suffix=".ptr.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"df": f"df_v{batch_id}", "stats": f"stats_v{batch_id}"}, f)
-    os.rename(tmp, os.path.join(path, "_current.json"))  # linearization point
-    fd, tmp = tempfile.mkstemp(dir=log_dir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-    os.rename(tmp, marker)
-    shutil.rmtree(stage, ignore_errors=True)
+    def publish(stage_dir: str) -> None:
+        # every step is idempotent under a retry of the same batch_id
+        for fname in sorted(os.listdir(os.path.join(stage_dir, "tf"))):
+            if fname.endswith(".parquet"):
+                copy_atomic(
+                    os.path.join(stage_dir, "tf", fname),
+                    os.path.join(path, "tf", f"a{batch_id}-{fname}"),
+                )
+        for sub in ("df", "stats"):
+            vdir = os.path.join(path, f"{sub}_v{batch_id}")
+            if not os.path.exists(vdir):
+                tmpd = vdir + ".tmp"
+                shutil.rmtree(tmpd, ignore_errors=True)
+                shutil.copytree(os.path.join(stage_dir, sub), tmpd)
+                os.rename(tmpd, vdir)  # vdir appears complete or not at all
+        write_atomic(  # linearization point
+            os.path.join(path, "_current.json"),
+            json.dumps({"df": f"df_v{batch_id}", "stats": f"stats_v{batch_id}"}),
+        )
+
+    run_staged_batch(path, batch_id, stage, publish)

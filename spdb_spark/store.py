@@ -9,14 +9,13 @@ analog of spdb's S3 object store keyed md5&lookup&res&t&morton
 and min/max row-group pruning, and `pgroup = morton >> 12` (a 16x16x16
 super-block of cuboids) is the physical partition unit: writes read and
 rewrite ONLY the super-blocks they touch, so write cost tracks the write,
-not the channel size (the plain-parquet stand-in for Delta MERGE file
-granularity).
+not the channel size.
 
 Write path parity (spatialdb.py:719-867): input array -> tiles -> merge into
 store with non-zero-overwrite (overwriteDense.c), fill-only
-(exceptionDense.c) or to_black erase (cube.py:264-291) semantics, one
-atomic partition rewrite (Delta/Iceberg MERGE INTO in production — plain
-parquet dynamic-partition-overwrite here since the container has no Delta).
+(exceptionDense.c) or to_black erase (cube.py:264-291) semantics, then one
+staged rewrite of the touched super-block partitions (Spark dynamic
+partition overwrite).
 
 Read path parity (spatialdb.py:360-717): box -> covering cuboid range filter
 (partition+stats pruning) -> Arrow-batched blob decode -> trim to exact box;
@@ -105,26 +104,6 @@ class OverwritePublisher:
         )
 
 
-class SwapPublisher:
-    """Publish staged partitions by moving each staged partition directory
-    into the table root (file-granularity replace, the shape of a
-    Delta/Iceberg commit: new files swapped in, old files dropped, per
-    touched partition only). Proves CuboidStore's commit seam is
-    committer-agnostic (SURVEY §6 / SCALE.md claim)."""
-
-    def publish(self, store: "CuboidStore", stage_dir: str) -> None:
-        table_dirs = _list_partition_dirs(store.path)
-        for key, src in _list_partition_dirs(stage_dir).items():
-            dest = table_dirs.get(key)
-            if dest is None:
-                rel = os.path.relpath(src, stage_dir)
-                dest = os.path.join(store.path, rel)
-            if os.path.isdir(dest):
-                shutil.rmtree(dest)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(src, dest)
-
-
 class CuboidStore:
     def __init__(
         self,
@@ -132,13 +111,11 @@ class CuboidStore:
         path: str,
         datatype: str = "uint8",
         lookup_key: str = "4&3&2",
-        committer=None,
     ):
         self.spark = spark
         self.path = path
         self.datatype = datatype
         self.lookup_key = lookup_key
-        self.committer = committer or OverwritePublisher()
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # -- helpers ------------------------------------------------------------
@@ -331,12 +308,12 @@ class CuboidStore:
         directory on disk — fully materialized before any table file is
         deleted, so the publish step never recomputes from files it is
         replacing (unlike a cache, whose evicted blocks would); (2) publish
-        via the pluggable committer (dynamic partition overwrite by default,
-        Delta/Iceberg MERGE in production). `touched` lists the pgroups this
-        write read and merged: a touched pgroup with NO surviving rows never
-        appears in `blocks`, so the committer can't replace it — we delete
-        those partition directories explicitly (the stale-erase fix: a
-        to_black erase that empties a super-block must actually remove it)."""
+        the staged partitions by dynamic partition overwrite
+        (`OverwritePublisher`). `touched` lists the pgroups this write read
+        and merged: a touched pgroup with NO surviving rows never appears in
+        `blocks`, so the overwrite can't replace it — we delete those
+        partition directories explicitly (the stale-erase fix: a to_black
+        erase that empties a super-block must actually remove it)."""
         stage_dir = f"{self.path}.stage-{uuid.uuid4().hex[:12]}"
         try:
             (
@@ -354,7 +331,7 @@ class CuboidStore:
                 if lk == self.lookup_key and res == resolution
             }
             if stage_parts:  # nothing staged (e.g. erase-all) -> only deletes
-                self.committer.publish(self, stage_dir)
+                OverwritePublisher().publish(self, stage_dir)
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
         if touched:
@@ -393,29 +370,20 @@ class CuboidStore:
 
     def compact(self, resolution: int = 0, blocks_per_file: int = 64) -> None:
         """Small-file compaction: rewrite each super-block partition into
-        ~ceil(n/blocks_per_file) Morton-sorted files. Repeated incremental
-        writes fragment partitions (one file per write); compaction restores
-        the scan-friendly layout (the OPTIMIZE/ZORDER maintenance job of a
-        real table format)."""
+        ~ceil(n/blocks_per_file) Morton-ranged files, staged and published
+        by `_commit` like any write. Repeated incremental writes fragment
+        partitions (one file per write); compaction restores the
+        scan-friendly layout (the OPTIMIZE/ZORDER maintenance job of a real
+        table format)."""
         blocks = self.blocks(resolution)
         n = blocks.count()
         if n == 0:
             return
         num_files = max(1, -(-n // blocks_per_file))
-        staged = blocks.repartitionByRange(
-            num_files, "pgroup", "morton", "t"
-        ).sortWithinPartitions("pgroup", "morton", "t")
-        # stage-to-disk then publish, same safety story as _commit
-        stage_dir = f"{self.path}.stage-{uuid.uuid4().hex[:12]}"
-        try:
-            (
-                staged.write.mode("overwrite")
-                .partitionBy("lookup_key", "resolution", "pgroup")
-                .parquet(stage_dir)
-            )
-            self.committer.publish(self, stage_dir)
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
+        self._commit(
+            blocks.repartitionByRange(num_files, "pgroup", "morton", "t"),
+            resolution,
+        )
 
     # -- resolution hierarchy ------------------------------------------------
 

@@ -26,10 +26,6 @@ mismatch.
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 
 from spdb_spark.functions.membership import (
@@ -65,21 +61,7 @@ class StreamingBloomFilter(BatchLedgerSink):
     ):
         _validate(m_bits, k)
         super().__init__(spark, base_path)
-        params_path = os.path.join(base_path, "_params.json")
-        params = {"m_bits": m_bits, "k": k}
-        if os.path.exists(params_path):
-            with open(params_path) as f:
-                on_disk = json.load(f)
-            if on_disk != params:
-                raise ValueError(
-                    f"bloom filter at {base_path} was built with "
-                    f"{on_disk}, reopened with {params}"
-                )
-        else:
-            fd, tmp = tempfile.mkstemp(dir=base_path, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(params, f)
-            os.rename(tmp, params_path)
+        self._pin_params("bloom filter", {"m_bits": m_bits, "k": k})
         self.m_bits = m_bits
         self.k = k
         self.key_col = key_col

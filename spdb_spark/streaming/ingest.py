@@ -419,8 +419,8 @@ class TransactionalVoxelIngest(StreamingVoxelIngest):
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         import json
         import os
-        import tempfile
 
+        from spdb_spark.commit import write_atomic
         from spdb_spark.store import _list_partition_dirs
 
         committed = self._committed()
@@ -492,17 +492,16 @@ class TransactionalVoxelIngest(StreamingVoxelIngest):
                 else:
                     new_idx.pop(ks, None)
         # atomic commit: the manifest rename is the transaction boundary
-        fd, tmp = tempfile.mkstemp(dir=self._log_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(
+        write_atomic(
+            os.path.join(self._log_dir, f"{version}.json"),
+            json.dumps(
                 {
                     "batch_id": batch_id,
                     "partitions": new_parts,
                     "index_partitions": new_idx,
-                },
-                f,
-            )
-        os.rename(tmp, os.path.join(self._log_dir, f"{version}.json"))
+                }
+            ),
+        )
         self._version = version
 
     def compact(self) -> None:
@@ -518,8 +517,8 @@ class TransactionalVoxelIngest(StreamingVoxelIngest):
         until `vacuum`."""
         import json
         import os
-        import tempfile
 
+        from spdb_spark.commit import write_atomic
         from spdb_spark.store import _list_partition_dirs
 
         committed = self._committed()
@@ -558,9 +557,9 @@ class TransactionalVoxelIngest(StreamingVoxelIngest):
                 _list_partition_dirs(os.path.join(self.table_path, idx_dir_name))
             )
             new_idx = {self._key_str(k): idx_dir_name for k in staged_idx}
-        fd, tmp = tempfile.mkstemp(dir=self._log_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(
+        write_atomic(
+            os.path.join(self._log_dir, f"{next_id}.json"),
+            json.dumps(
                 {
                     # maintenance commit: no batch_id, so a FUTURE stream
                     # batch with this number is never mistaken for a replay
@@ -568,10 +567,9 @@ class TransactionalVoxelIngest(StreamingVoxelIngest):
                     "partitions": new_parts,
                     "index_partitions": new_idx,
                     "compacted": True,
-                },
-                f,
-            )
-        os.rename(tmp, os.path.join(self._log_dir, f"{next_id}.json"))
+                }
+            ),
+        )
         self._version = next_id
 
     def vacuum(self, keep_last: int = 2) -> None:

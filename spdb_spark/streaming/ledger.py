@@ -31,9 +31,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame
+
+from spdb_spark.commit import write_atomic
 
 
 class BatchLedgerSink:
@@ -64,10 +65,26 @@ class BatchLedgerSink:
         return os.path.join(self.base_path, sub, f"b{batch_id}")
 
     def _commit(self, batch_id: int) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self._log_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.rename(tmp, os.path.join(self._log_dir, f"{batch_id}.json"))
+        write_atomic(
+            os.path.join(self._log_dir, f"{batch_id}.json"),
+            json.dumps({"batch_id": batch_id}),
+        )
+
+    def _pin_params(self, kind: str, params: dict) -> None:
+        """Record `params` in `_params.json` on first open; a reopen with
+        different ones raises, since the stored state was built under the
+        recorded ones and would silently mix with the new."""
+        path = os.path.join(self.base_path, "_params.json")
+        if not os.path.exists(path):
+            write_atomic(path, json.dumps(params))
+            return
+        with open(path) as f:
+            on_disk = json.load(f)
+        if on_disk != params:
+            raise ValueError(
+                f"{kind} at {self.base_path} was built with {on_disk}, "
+                f"reopened with {params}"
+            )
 
     # -- compaction --------------------------------------------------------
 
@@ -125,12 +142,9 @@ class BatchLedgerSink:
                 ).parquet(dest)
             else:
                 df.write.mode("overwrite").parquet(dest)
-        fd, tmp = tempfile.mkstemp(
-            dir=self.base_path, suffix=".compact.tmp"
+        write_atomic(
+            self._compact_path(), json.dumps({"watermark": wm, "gen": gen})
         )
-        with os.fdopen(fd, "w") as f:
-            json.dump({"watermark": wm, "gen": gen}, f)
-        os.rename(tmp, self._compact_path())
 
     def vacuum(self) -> None:
         """Remove batch dirs covered by the compaction watermark and stale

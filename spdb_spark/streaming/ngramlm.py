@@ -50,10 +50,6 @@ class StreamingKNScorer(BatchLedgerSink):
         id_type: str = "long",
         discount: float = 0.75,
     ):
-        import json
-        import os
-        import tempfile
-
         super().__init__(spark, base_path)
         # (id_col, id_type, discount) shape the persisted score rows —
         # guard reopen mismatches like the Bloom/count-min sinks do.
@@ -70,26 +66,15 @@ class StreamingKNScorer(BatchLedgerSink):
             "t1": int(totals["t1"]),
             "v_size": int(totals["v_size"]),
         }
-        params_path = os.path.join(base_path, "_params.json")
-        params = {
-            "id_col": id_col,
-            "id_type": id_type,
-            "discount": discount,
-            "model": fingerprint,
-        }
-        if os.path.exists(params_path):
-            with open(params_path) as f:
-                on_disk = json.load(f)
-            if on_disk != params:
-                raise ValueError(
-                    f"KN scorer at {base_path} was built with {on_disk}, "
-                    f"reopened with {params}"
-                )
-        else:
-            fd, tmp = tempfile.mkstemp(dir=base_path, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(params, f)
-            os.rename(tmp, params_path)
+        self._pin_params(
+            "KN scorer",
+            {
+                "id_col": id_col,
+                "id_type": id_type,
+                "discount": discount,
+                "model": fingerprint,
+            },
+        )
         self.model = model
         self.text_col = text_col
         self.id_col = id_col

@@ -17,10 +17,6 @@ and enforced on reopen, as the Bloom sink does.
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 
 from spdb_spark.functions.sketch import (
@@ -58,21 +54,7 @@ class StreamingCountMin(BatchLedgerSink):
     ):
         _validate(width, depth)
         super().__init__(spark, base_path)
-        params_path = os.path.join(base_path, "_params.json")
-        params = {"width": width, "depth": depth}
-        if os.path.exists(params_path):
-            with open(params_path) as f:
-                on_disk = json.load(f)
-            if on_disk != params:
-                raise ValueError(
-                    f"count-min sketch at {base_path} was built with "
-                    f"{on_disk}, reopened with {params}"
-                )
-        else:
-            fd, tmp = tempfile.mkstemp(dir=base_path, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(params, f)
-            os.rename(tmp, params_path)
+        self._pin_params("count-min sketch", {"width": width, "depth": depth})
         self.width = width
         self.depth = depth
         self.key_col = key_col

@@ -35,6 +35,28 @@ def tables(spark):
 
 
 @pytest.fixture(scope="session")
+def gate_frame(spark):
+    """`gate_frame(name, fn)`: full collect (every column) of registry gate
+    `fn` under a session whose ANSI flag is forced on, memoised per gate
+    name for the session — the ANSI net (test_ansi_parity) and the gate's
+    oracle compare (test_suite_r13/r14) grade the same frame instead of
+    running each streaming/crawl gate twice."""
+    frames = {}
+
+    def collect(name, fn):
+        if name not in frames:
+            before = spark.conf.get("spark.sql.ansi.enabled")
+            spark.conf.set("spark.sql.ansi.enabled", "true")
+            try:
+                frames[name] = fn(spark, SF_DIR).toPandas()
+            finally:
+                spark.conf.set("spark.sql.ansi.enabled", before)
+        return frames[name].copy()
+
+    return collect
+
+
+@pytest.fixture(scope="session")
 def clustered2k(spark):
     """The 2000-vector recall-floor corpus (tools.ann_recall.make_clustered
     defaults) — built once per SESSION: three recall-floor tests across

@@ -20,12 +20,9 @@ Two nets:
 Round authors: extend NEWEST_STAGED with each new round's staged dict.
 """
 
-import contextlib
-
 import pytest
 
 from spdb_spark.suite_crawl import STAGED_R13, STAGED_R14
-from tests.conftest import SF_DIR
 
 NEWEST_STAGED: dict = {}
 NEWEST_STAGED.update(STAGED_R13)
@@ -37,19 +34,8 @@ def test_session_default_is_ansi_on(spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
 
 
-@contextlib.contextmanager
-def _ansi_on(spark):
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.mark.parametrize("name", sorted(NEWEST_STAGED))
-def test_new_gate_full_collect_ansi(spark, name):
+def test_new_gate_full_collect_ansi(gate_frame, name):
     fn, _sql = NEWEST_STAGED[name]
-    with _ansi_on(spark):
-        pdf = fn(spark, SF_DIR).toPandas()  # full collect, every column
+    pdf = gate_frame(name, fn)  # full collect, every column, ANSI forced on
     assert len(pdf) >= 0

@@ -5,31 +5,21 @@ merge-mode truth tables; time samples; id filter."""
 import numpy as np
 import pytest
 
-from spdb_spark.store import CuboidStore, OverwritePublisher, SwapPublisher
+from spdb_spark.store import CuboidStore
 
 
-@pytest.fixture(params=["overwrite", "swap"])
-def store(spark, tmp_path, request):
-    """PUBLISH-SEAM tests run against BOTH committers: the dynamic-overwrite
-    publisher (default) and the file-granularity swap publisher — the commit
-    seam must be committer-agnostic (SCALE.md's Delta/Iceberg swap claim).
-    Only tests that observe publish behavior (which partitions/files get
-    rewritten or removed) use this parametrized fixture; merge-mode truth
-    tables and read-path tests compute their result BEFORE the publish and
-    are committer-independent, so they run once on `store1` — running them
-    twice doubled the module's wall (the suite's single most expensive
-    module) for zero added coverage."""
-    committer = (
-        OverwritePublisher() if request.param == "overwrite" else SwapPublisher()
-    )
-    return CuboidStore(
-        spark, str(tmp_path / "blocks"), datatype="uint8", committer=committer
-    )
+@pytest.fixture(params=["overwrite"])
+def store(spark, tmp_path):
+    """Store for the PUBLISH-SEAM tests: they observe which partitions and
+    files the commit rewrites or removes. The param id names the publisher
+    they exercise (dynamic partition overwrite, CuboidStore's only one)."""
+    return CuboidStore(spark, str(tmp_path / "blocks"), datatype="uint8")
 
 
 @pytest.fixture
 def store1(spark, tmp_path):
-    """Single-committer store for committer-independent tests (see store)."""
+    """Store for tests whose result is fixed before the publish step
+    (merge-mode truth tables, read paths)."""
     return CuboidStore(spark, str(tmp_path / "blocks"), datatype="uint8")
 
 

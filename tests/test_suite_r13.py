@@ -31,9 +31,9 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 @pytest.mark.parametrize("name", list(ALL_R13))
-def test_r13_gate_exact(spark, name):
+def test_r13_gate_exact(gate_frame, name):
     fn, sql = ALL_R13[name]
-    got = _canon(fn(spark, SF_DIR).toPandas())
+    got = _canon(gate_frame(name, fn))
     want = _canon(_oracle(sql))
     assert list(got.columns) == list(want.columns), name
     assert len(got) == len(want), name
